@@ -68,12 +68,14 @@ def build_arg_parser() -> argparse.ArgumentParser:
 def _ingest_feed(spark, reader, parts, output_dir, kind: str):
     """Shared (turns, rejects) ingest policy for the JSONL/CSV front
     doors: route rejects to <output>/rejects_<kind>, or — with no output
-    dir — surface that rows were dropped without a second full scan."""
+    dir — surface that rows were dropped. Either way the feed is scanned
+    twice: once here for the rejects, and again when the pipeline reads
+    the returned ``turns``."""
     turns, rejects = reader(spark, parts)
     if output_dir:
-        # one write job, no eager pre-count (a rejects.count() here would
-        # be a second full scan of the feed); the row count afterwards
-        # reads only parquet footers
+        # one write job (a full scan of the feed), no eager pre-count (a
+        # rejects.count() here would be a third scan); the row count
+        # afterwards reads only the rejects sink's parquet footers
         rej_dir = os.path.join(output_dir, f"rejects_{kind}")
         rejects.write.mode("overwrite").parquet(rej_dir)
         n_rej = spark.read.parquet(rej_dir).count()

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import state as st
@@ -62,22 +62,6 @@ class CorpusResult:
     sink_counts: dict[str, int] = field(default_factory=dict)
 
 
-def _bucket(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_buckets)).cast(
-        "int"
-    )
-
-
-def _write_counted(df: DataFrame, output_dir: str, name: str, **kw) -> int:
-    """Write with the row count observed INSIDE the write job — no separate
-    count pass over the sink (pipeline.py's ``_write_observed`` pattern,
-    generalized to partitioned/dynamic-overwrite writes)."""
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    catalog.write_table(df, output_dir, name, **kw)
-    return int(obs.get["n"])
-
-
 def score_projection(docs: DataFrame, n_buckets: int) -> DataFrame:
     """All row-local curation signals in ONE scan: the token array is
     materialized once per row and every signal family reads it (quality,
@@ -95,7 +79,7 @@ def score_projection(docs: DataFrame, n_buckets: int) -> DataFrame:
         "doc_id",
         "lang",
         "source",
-        _bucket(n_buckets).alias("bucket"),
+        catalog.bucket_of(F.col("doc_id").cast("string"), n_buckets).alias("bucket"),
         *(expr.alias(name) for name, expr in q.items()),
         *(g[name].alias(name) for name in _GOPHER_EXTRA),
         F.length("text").alias("n_chars"),
@@ -189,8 +173,10 @@ def run_corpus_pipeline(
     )):
         with st.StageTimer() as t:
             comp = dd.dedup_components(docs)
-            comp = comp.withColumn("bucket", _bucket(n_buckets))
-            n_comp = _write_counted(
+            comp = comp.withColumn(
+                "bucket", catalog.bucket_of(F.col("doc_id").cast("string"), n_buckets)
+            )
+            n_comp = catalog.write_observed(
                 comp, output_dir, "doc_components",
                 partition_cols=["bucket"], mode="overwrite_partitions",
             )
@@ -238,7 +224,7 @@ def run_corpus_pipeline(
                 .alias("reason"),
             )
         )
-        result.sink_counts["corpus_decisions"] = _write_counted(
+        result.sink_counts["corpus_decisions"] = catalog.write_observed(
             decisions, output_dir, "corpus_decisions",
             partition_cols=["bucket"], mode="overwrite_partitions",
         )
@@ -253,7 +239,7 @@ def run_corpus_pipeline(
                 F.sum("n_tokens").alias("n_tokens"),
             )
         )
-        result.sink_counts["corpus_mixture"] = _write_counted(
+        result.sink_counts["corpus_mixture"] = catalog.write_observed(
             mixture, output_dir, "corpus_mixture", mode="overwrite"
         )
     st.append_state(

@@ -5,14 +5,15 @@ Spark-first rebuild of the reference drivers (``main.py:117-178``,
 engineering the north rule demands:
 
 - **bucketing**: facts are hashed into ``n_buckets`` by ``conv_id``
-  (``pmod(xxhash64(conv_id), n)``) — the unit of lineage, resume, and sink
+  (``catalog.bucket_of``) — the unit of lineage, resume, and sink
   partitioning (Iceberg ``bucket(n, conv_id)`` on a real cluster);
 - **two checkpointable stages** with different recovery granularity:
 
   * ``route`` (per-bucket, resumable bucket-by-bucket): parse + enrich +
     per-ROW detectors (attack/scan patterns — embarrassingly parallel),
     fanned out to parsed/error/reject sinks and per-severity event sinks,
-    one persisted frame feeding every sink;
+    one persisted frame feeding every sink (:func:`route_frames`, shared
+    with ``streaming_route``);
   * ``aggregate`` (global, all-or-nothing): reads BACK the completed
     parsed_turns sink (never recomputes parse) and runs the group-by
     detectors (suspicious IP / brute force / unusual method — global by
@@ -28,11 +29,10 @@ engineering the north rule demands:
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -55,6 +55,11 @@ AGG_SINKS_BY_SEVERITY = {
     "medium": "security_events_agg_medium",
     "low": "security_events_agg_low",
 }
+# Sink-write jobs in flight at once per fan-out. Every sink of a fan-out
+# reads only persisted frames, so concurrent submission overlaps the
+# writes' job-scheduling and commit latency; one slot per sink.
+ROUTE_SINK_CONCURRENCY = 6
+AGG_SINK_CONCURRENCY = 5
 
 
 @dataclass
@@ -64,20 +69,6 @@ class PipelineResult:
     buckets_skipped: list[int]
     aggregate_ran: bool = False
     sink_counts: dict[str, int] = field(default_factory=dict)
-
-
-def _bucket(col: str, n_buckets: int) -> Column:
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
-
-def _sink_concurrency() -> int:
-    """How many independent sink-write jobs to have in flight at once.
-
-    Concurrent submission overlaps job-scheduling + commit latency of the
-    fan-out writes (all of which read only persisted frames). Tunable via
-    SPARK_GRAFT_SINK_CONCURRENCY; 1 = fully sequential writes.
-    """
-    return max(1, int(os.environ.get("SPARK_GRAFT_SINK_CONCURRENCY", "6")))
 
 
 def run_pipeline(
@@ -116,7 +107,9 @@ def run_pipeline(
     result = PipelineResult(run_id, pending, sorted(done))
 
     if pending:
-        bucketed = transcripts.withColumn("bucket", _bucket("conv_id", n_buckets))
+        bucketed = transcripts.withColumn(
+            "bucket", catalog.bucket_of("conv_id", n_buckets)
+        )
         if done:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
         _route_stage(spark, bucketed, output_dir, run_id, result, parse_engine,
@@ -133,15 +126,47 @@ def run_pipeline(
     return result
 
 
-def _sink(
-    result: PipelineResult, df: DataFrame, output_dir: str, name: str, total: int
-) -> None:
-    """Bucket-partitioned idempotent write; counts come from the caller's
-    single grouped-count pass, not a per-sink job."""
-    catalog.write_table(
-        df, output_dir, name, partition_cols=["bucket"], mode="overwrite_partitions"
+def row_events(
+    enriched: DataFrame, cfg: RuntimeConfig = DEFAULT_CONFIG, n_buckets: int = 32
+) -> DataFrame:
+    """Every per-row detector's events (global detectors run in the
+    aggregate stage), bucketed by ``conv_id`` like the turns they came
+    from."""
+    return (
+        sec.attack_events(enriched, cfg)
+        .unionByName(sec.scan_events(enriched, cfg))
+        .withColumn("bucket", catalog.bucket_of("conv_id", n_buckets))
     )
-    result.sink_counts[name] = result.sink_counts.get(name, 0) + total
+
+
+def route_frames(
+    enriched: DataFrame,
+    cfg: RuntimeConfig = DEFAULT_CONFIG,
+    n_buckets: int = 32,
+    events: DataFrame | None = None,
+) -> dict[str, DataFrame]:
+    """The route stage's sinks by name, as lazy frames over ``enriched``
+    (parse + enrich output with a ``bucket`` column): the one definition
+    of each route sink's filter and projection, for the batch route stage
+    and ``streaming_route`` alike. ``events`` is the caller's
+    :func:`row_events` frame when it persists or counts that frame
+    first."""
+    if events is None:
+        events = row_events(enriched, cfg, n_buckets)
+    return {
+        "parsed_turns": enriched.where(F.col("log_type") == "access").drop("ts"),
+        "error_turns": enriched.where(F.col("log_type") == "error").select(
+            "bucket", "conv_id", "turn_idx", "ts_parsed",
+            "level", "module", "pid", "message", "text",
+        ),
+        "rejects": enriched.where(F.col("log_format").isNull()).select(
+            "bucket", "conv_id", "turn_idx", "role", "tool", "ts", "text"
+        ),
+        **{
+            name: events.where(F.col("severity") == severity)
+            for severity, name in ROW_SINKS_BY_SEVERITY.items()
+        },
+    }
 
 
 def _route_stage(
@@ -181,61 +206,33 @@ def _route_stage(
         counts: dict[str, dict[int, int]] = {}
         for r in cat_rows:
             counts.setdefault(r["cat"], {})[r["bucket"]] = r["cnt"]
+        totals = {name: sum(by_bucket.values()) for name, by_bucket in counts.items()}
 
-        def total(name: str) -> int:
-            return sum(counts.get(name, {}).values())
+        events = row_events(enriched, cfg, n_buckets)
+        events.persist(StorageLevel.MEMORY_AND_DISK)
+        for r in events.groupBy("severity").agg(F.count("*").alias("cnt")).collect():
+            totals[ROW_SINKS_BY_SEVERITY[r["severity"]]] = r["cnt"]
+        frames = route_frames(enriched, cfg, n_buckets, events)
 
-        access = enriched.where(F.col("log_type") == "access")
-        errors = enriched.where(F.col("log_type") == "error").select(
-            "bucket", "conv_id", "turn_idx", "ts_parsed",
-            "level", "module", "pid", "message", "text",
-        )
-        rejects = enriched.where(F.col("log_format").isNull()).select(
-            "bucket", "conv_id", "turn_idx", "role", "tool", "ts", "text"
-        )
-        # per-row detectors only (global detectors run in the aggregate
-        # stage); bucket survives from the enriched frame's layout
-        row_events = (
-            sec.attack_events(enriched, cfg)
-            .unionByName(sec.scan_events(enriched, cfg))
-            .withColumn("bucket", _bucket("conv_id", n_buckets))
-        )
-        row_events.persist(StorageLevel.MEMORY_AND_DISK)
-        sev_counts: dict[str, int] = {}
-        for r in row_events.groupBy("severity").agg(F.count("*").alias("cnt")).collect():
-            sev_counts[r["severity"]] = r["cnt"]
-
-        # Every sink below reads only the two persisted frames (both fully
+        # Every sink reads only the two persisted frames (both fully
         # materialized by the count jobs above), so the six writes are
         # independent Spark actions — submit them concurrently and let the
         # scheduler interleave; each writes a distinct sink_counts key.
+        def sink(name: str) -> None:
+            catalog.write_table(
+                frames[name], output_dir, name,
+                partition_cols=["bucket"], mode="overwrite_partitions",
+            )
+            result.sink_counts[name] = totals.get(name, 0)
+
         try:
-            with ThreadPoolExecutor(max_workers=_sink_concurrency()) as pool:
-                futures = [
-                    pool.submit(_sink, result, access.drop("ts"), output_dir,
-                                "parsed_turns", total("parsed_turns")),
-                    pool.submit(_sink, result, errors, output_dir,
-                                "error_turns", total("error_turns")),
-                    pool.submit(_sink, result, rejects, output_dir,
-                                "rejects", total("rejects")),
-                ]
-                futures += [
-                    pool.submit(
-                        _sink,
-                        result,
-                        row_events.where(F.col("severity") == severity),
-                        output_dir,
-                        name,
-                        sev_counts.get(severity, 0),
-                    )
-                    for severity, name in ROW_SINKS_BY_SEVERITY.items()
-                ]
-                for f in futures:
+            with ThreadPoolExecutor(max_workers=ROUTE_SINK_CONCURRENCY) as pool:
+                for f in [pool.submit(sink, name) for name in frames]:
                     f.result()  # re-raises the first failure
         finally:
             # always drop the cache blocks — a failed concurrent sink write
             # must not leak MEMORY_AND_DISK blocks for the session lifetime
-            row_events.unpersist()
+            events.unpersist()
             enriched.unpersist()
 
     st.append_state(
@@ -245,15 +242,6 @@ def _route_stage(
             run_id, "route", counts.get("parsed_turns", {}), t.wall_ms, pending
         ),
     )
-
-
-def _write_observed(df: DataFrame, output_dir: str, name: str) -> int:
-    """Full-overwrite write with the row count observed INSIDE the write job
-    (no separate count pass)."""
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    catalog.write_table(df, output_dir, name, mode="overwrite")
-    return int(obs.get["n"])
 
 
 def _aggregate_stage(
@@ -287,7 +275,7 @@ def _aggregate_stage(
             .unionByName(sec.unusual_method_events(parsed, cfg))
             .withColumn(
                 "bucket",
-                F.coalesce(_bucket("conv_id", n_buckets), F.lit(-1)),
+                F.coalesce(catalog.bucket_of("conv_id", n_buckets), F.lit(-1)),
             )
         )
         agg_events.persist(StorageLevel.MEMORY_AND_DISK)
@@ -317,10 +305,10 @@ def _aggregate_stage(
         # (cache blocks are computed once under Spark's block-level locks,
         # whichever job touches a partition first).
         def _observed_to(name: str, df: DataFrame) -> None:
-            result.sink_counts[name] = _write_observed(df, output_dir, name)
+            result.sink_counts[name] = catalog.write_observed(df, output_dir, name)
 
         try:
-            with ThreadPoolExecutor(max_workers=min(5, _sink_concurrency())) as pool:
+            with ThreadPoolExecutor(max_workers=AGG_SINK_CONCURRENCY) as pool:
                 futures = [
                     pool.submit(
                         _observed_to, name,
@@ -345,7 +333,7 @@ def _aggregate_stage(
             if row_events is not None:
                 all_events = all_events.unionByName(row_events.drop("bucket"))
             scores = sec.ip_threat_scores(all_events, cfg)
-            result.sink_counts["ip_threat_scores"] = _write_observed(
+            result.sink_counts["ip_threat_scores"] = catalog.write_observed(
                 scores, output_dir, "ip_threat_scores"
             )
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import performance as perf
+from .pipeline import AGG_SINKS_BY_SEVERITY, ROW_SINKS_BY_SEVERITY
 from .sources import catalog
 
 SAMPLE_ROWS = 5
@@ -124,8 +125,8 @@ def render_report(spark: SparkSession, output_dir: str) -> str:
     out.append(_section("SECURITY ANALYSIS"))
     sev_frames = [
         df
-        for sev in ("high", "medium", "low")
-        for df in (read(f"security_events_{sev}"), read(f"security_events_agg_{sev}"))
+        for sev in ROW_SINKS_BY_SEVERITY
+        for df in (read(ROW_SINKS_BY_SEVERITY[sev]), read(AGG_SINKS_BY_SEVERITY[sev]))
         if df is not None
     ]
     if sev_frames:

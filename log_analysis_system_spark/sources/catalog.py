@@ -18,11 +18,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def table_format() -> str:
     return os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
+
+
+def bucket_of(col: str | Column, n_buckets: int) -> Column:
+    """The sink bucket of a key: ``pmod(xxhash64(col), n_buckets)`` as int
+    (Iceberg ``bucket(n, col)`` on a real cluster). The unit of lineage,
+    resume and sink partitioning for every pipeline."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def write_table(
@@ -54,6 +62,21 @@ def write_table(
         w.mode("overwrite").parquet(path)
     else:
         w.mode(mode).parquet(path)
+
+
+def write_observed(
+    df: DataFrame,
+    base_dir: str,
+    name: str,
+    partition_cols: list[str] | None = None,
+    mode: str = "overwrite",
+) -> int:
+    """:func:`write_table` returning the row count, observed INSIDE the
+    write job (no separate count pass over the sink)."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    write_table(df, base_dir, name, partition_cols=partition_cols, mode=mode)
+    return int(obs.get["n"])
 
 
 def write_bucketed_table(
@@ -118,8 +141,6 @@ def compact_table(
             "use Iceberg's rewrite_data_files procedure on the iceberg backend"
         )
     cols = partition_cols or ["bucket"]
-    from pyspark.sql import functions as F
-
     live = f"{base_dir}/{name}"
     staging = f"{base_dir}/{name}__compacting"
     retired = f"{base_dir}/{name}__retired"

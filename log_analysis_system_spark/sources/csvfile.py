@@ -84,6 +84,8 @@ def read_transcripts_csv(
     raw = (
         spark.read.schema(CSV_SCHEMA)
         .option("header", True)
+        # a header not matching CSV_SCHEMA fails the read (no lost row)
+        .option("enforceSchema", False)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("multiLine", multiline)

@@ -7,11 +7,10 @@ users who tail a transcript feed instead of re-running batches:
 - ``read_transcript_stream``: file-source stream over a transcripts
   directory (same schema as the batch input); on a real deployment this is
   a Kafka/Iceberg-CDC source with identical downstream code.
-- ``streaming_route``: the same parse + enrich + per-row detectors as the
-  batch route stage (the operators are stream-safe: pure row-local
-  expressions), fanned out per severity with ``foreachBatch`` so each
-  micro-batch reuses the batch sink writer (and its idempotent
-  bucket-partition overwrite).
+- ``streaming_route``: per micro-batch, parse + enrich and the batch route
+  stage's sink definitions (``pipeline.route_frames``, honouring ``cfg``),
+  written to ``parsed_turns`` and ``security_events_{high,medium,low}``
+  with idempotent ``batch_id``/``bucket`` partition overwrite.
 - ``streaming_traffic_counts``: tumbling event-time window aggregation with
   a watermark for late turns (the streaming analog of A9/A16).
 - ``streaming_failure_tool_join``: stream-stream interval join (failures x
@@ -39,8 +38,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..config import DEFAULT_CONFIG, RuntimeConfig
 from ..functions.parse import parse_transcripts
-from ..operators import security as sec
+from ..pipeline import ROW_SINKS_BY_SEVERITY, route_frames
 from ..sources import catalog
 from ..sources.dims import enrich
 
@@ -127,6 +127,8 @@ def read_transcript_stream_csv(
         spark.readStream.schema(CSV_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .option("header", True)
+        # a header not matching CSV_SCHEMA fails the read (no lost row)
+        .option("enforceSchema", False)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("multiLine", False)
@@ -144,44 +146,27 @@ def streaming_route(
     checkpoint_dir: str,
     n_buckets: int = 32,
     parse_engine: str = "pandas",
+    cfg: RuntimeConfig = DEFAULT_CONFIG,
 ):
-    """Parse + enrich + per-row detectors on a stream; per-severity fan-out
-    via foreachBatch reusing the batch writers, with ``batch_id`` leading
-    the partition spec + dynamic overwrite so a replayed micro-batch
-    (foreachBatch is at-least-once) replaces rather than duplicates its
-    output. Returns the started StreamingQuery."""
+    """Route each micro-batch (``foreachBatch``) through the batch route
+    stage's sink definitions (``pipeline.route_frames``) under ``cfg``,
+    writing ``parsed_turns`` and ``security_events_*``. ``batch_id`` leads
+    the partition spec and the writes dynamic-overwrite, so a replayed
+    micro-batch (foreachBatch is at-least-once) replaces rather than
+    duplicates its output. Returns the started StreamingQuery."""
+    sinks = ["parsed_turns", *ROW_SINKS_BY_SEVERITY.values()]
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = enrich(parse_transcripts(batch_df, engine=parse_engine))
-        enriched = enriched.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-        ).withColumn("batch_id", F.lit(batch_id))
+        enriched = enrich(
+            parse_transcripts(batch_df, engine=parse_engine, cfg=cfg)
+        ).withColumn("bucket", catalog.bucket_of("conv_id", n_buckets))
         enriched.persist()
         try:
-            # foreachBatch is at-least-once: batch_id leads the partition
-            # spec and the write dynamic-overwrites, so a replayed batch
-            # replaces its own partitions instead of double-appending
-            access = enriched.where(F.col("log_type") == "access").drop("ts")
-            catalog.write_table(
-                access, output_dir, "parsed_turns",
-                partition_cols=["batch_id", "bucket"],
-                mode="overwrite_partitions",
-            )
-            events = sec.attack_events(enriched).unionByName(
-                sec.scan_events(enriched)
-            )
-            for severity, name in [
-                ("high", "security_events_high"),
-                ("medium", "security_events_medium"),
-                ("low", "security_events_low"),
-            ]:
-                df = events.where(F.col("severity") == severity).withColumn(
-                    "bucket",
-                    F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int"),
-                ).withColumn("batch_id", F.lit(batch_id))
+            frames = route_frames(enriched, cfg, n_buckets)
+            for name in sinks:
                 catalog.write_table(
-                    df, output_dir, name,
+                    frames[name].withColumn("batch_id", F.lit(batch_id)),
+                    output_dir, name,
                     partition_cols=["batch_id", "bucket"],
                     mode="overwrite_partitions",
                 )

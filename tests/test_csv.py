@@ -10,6 +10,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pytest
 from pyspark.sql import functions as F
 
 from log_analysis_system_spark.queries_log import load_transcripts
@@ -189,3 +190,17 @@ def test_csv_rejects_raw_is_structured_json(spark, tmp_path):
     #                          # named slots below are positionally safe
     assert d["turn_idx"] == 2 and d["text"] == "orphan, with comma"
     assert d["tool"] == "bash"
+
+
+def test_csv_headerless_feed_fails_loudly(spark, tmp_path):
+    """A feed without its header line fails the read instead of taking
+    its first data row as the header (that row would vanish silently)."""
+    p = tmp_path / "feed"
+    p.mkdir()
+    (p / "drop.csv").write_text(
+        "c2,0,user,first row,\\N,2024-01-01T00:00:00\n"
+        "c3,1,user,second row,\\N,2024-01-01T00:00:01\n"
+    )
+    turns, _ = read_transcripts_csv(spark, str(p))
+    with pytest.raises(Exception, match="does not conform to the schema"):
+        turns.collect()

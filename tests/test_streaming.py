@@ -69,6 +69,59 @@ def test_streaming_route_matches_batch_counts(spark, stream_dirs):
     assert n_total == expected > n_first
 
 
+def test_streaming_route_honours_cfg_like_batch(spark, stream_dirs, tmp_path):
+    """streaming_route and run_pipeline share one route definition: under
+    the same non-default cfg, every sink the stream writes holds exactly
+    the batch run's rows, each conversation in the same bucket."""
+    import collections
+    import dataclasses
+    import pathlib
+
+    from log_analysis_system_spark.config import DEFAULT_CONFIG
+    from log_analysis_system_spark.pipeline import ROW_SINKS_BY_SEVERITY, run_pipeline
+    from log_analysis_system_spark.streaming.stream_pipeline import TRANSCRIPT_SCHEMA
+
+    # disjoint from the default patterns' hits: the attack/scan endpoints
+    # of the generator never contain "/api/", "/admin" or "checkout"
+    cfg = dataclasses.replace(
+        DEFAULT_CONFIG,
+        attack_patterns=("/api/",),
+        scan_patterns=("/admin", "checkout"),
+    )
+    load_transcripts(spark, SF).write.parquet(stream_dirs["in"])
+    turns = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(stream_dirs["in"])
+    batch_out = str(tmp_path / "batch")
+    run_pipeline(spark, turns, batch_out, "cfg-run", n_buckets=8,
+                 resume=False, cfg=cfg)
+    q = streaming_route(
+        read_transcript_stream(spark, stream_dirs["in"], max_files_per_trigger=1000),
+        stream_dirs["out"], stream_dirs["ckpt"], n_buckets=8, cfg=cfg,
+    )
+    assert q.awaitTermination(300)
+
+    def sink(base, name):
+        """(row multiset without bucket/batch_id, {(conv_id, bucket)})."""
+        if not list(pathlib.Path(base, name).rglob("*.parquet")):
+            return collections.Counter(), set()
+        df = spark.read.parquet(f"{base}/{name}")
+        cols = sorted(set(df.columns) - {"bucket", "batch_id"})
+        rows = collections.Counter(tuple(r) for r in df.select(cols).collect())
+        pairs = {(r.conv_id, r.bucket) for r in df.select("conv_id", "bucket").collect()}
+        return rows, pairs
+
+    for name in ["parsed_turns", *ROW_SINKS_BY_SEVERITY.values()]:
+        assert sink(batch_out, name) == sink(stream_dirs["out"], name), name
+
+    def endpoints(name):
+        df = spark.read.parquet(f"{batch_out}/{name}")
+        return {r.endpoint for r in df.select("endpoint").collect()}
+
+    high = endpoints("security_events_high")
+    medium = endpoints("security_events_medium")
+    assert high and all("/api/" in e for e in high)
+    assert medium and all("/admin" in e or "checkout" in e for e in medium)
+
+
 def test_streaming_window_counts(spark, stream_dirs):
     t = load_transcripts(spark, SF)
     t.write.mode("append").parquet(stream_dirs["in"])
@@ -511,3 +564,27 @@ def test_streaming_csv_source_matches_parquet_stream(spark, stream_dirs):
         .count()
     )
     assert n_total == expected > 0
+
+
+def test_streaming_csv_source_fails_on_headerless_drop(spark, stream_dirs):
+    """A CSV drop without its header line fails the query instead of
+    taking its first data row as the header (that row would vanish)."""
+    import pathlib
+
+    from log_analysis_system_spark.streaming.stream_pipeline import (
+        read_transcript_stream_csv,
+    )
+
+    feed = pathlib.Path(stream_dirs["in"])
+    feed.mkdir(parents=True, exist_ok=True)
+    (feed / "drop0.csv").write_text(
+        "c2,0,user,first row,\\N,2024-01-01T00:00:00\n"
+        "c3,1,user,second row,\\N,2024-01-01T00:00:01\n"
+    )
+    q = streaming_route(
+        read_transcript_stream_csv(spark, str(feed)),
+        stream_dirs["out"],
+        stream_dirs["ckpt"],
+    )
+    with pytest.raises(Exception, match="does not conform to the schema"):
+        q.awaitTermination(300)
